@@ -67,9 +67,9 @@ PIP_TILES = [
 
 def _big_pip_ring(n: int = 240) -> list[list[float]]:
     """A deterministic jagged 240-vertex CONCAVE ring around city 8
-    (1N, 8E): r(theta) = 1.2 + 0.5 sin(9 theta) degrees. Well above
-    tagjoin.MAX_INLINE_EDGES, so the engine's array-aggregate winding
-    fallback (the realistic admin-boundary path) is what runs."""
+    (1N, 8E): r(theta) = 1.2 + 0.5 sin(9 theta) degrees: an
+    admin-boundary-sized edge array for the engine's aggregate
+    winding (tagjoin._winding_agg_sql)."""
     ring = []
     for k in range(n):
         th = 2.0 * math.pi * k / n

@@ -55,14 +55,15 @@ MAX_SIZE = 1 << MAX_LEVEL
 POS_BITS = 2 * MAX_LEVEL + 1  # 61
 _D = math.pi / 180.0
 
-# The 1024-entry Hilbert lookup table as a plain int list -> shipped to
-# executors once as an array literal (element_at is O(1) on literal
-# array data).
-_LOOKUP_POS_LIST = [int(v) for v in LOOKUP_POS]
+# The 1024-entry Hilbert lookup table as ONE SQL ``array(...)`` of INT
+# literals, shipped to executors once (element_at is O(1) on literal
+# array data). The text is built once per process and parsed by a
+# single JVM call; F.lit(list) costs one py4j round-trip per element.
+_LOOKUP_SQL = "array(" + ", ".join(str(int(v)) for v in LOOKUP_POS) + ")"
 
 
 def _lookup_lit() -> Column:
-    return F.lit(_LOOKUP_POS_LIST)
+    return F.expr(_LOOKUP_SQL)
 
 
 # ----------------------------------------------------------- encode chain

@@ -22,9 +22,11 @@ ZERO Python on the certified path:
       arithmetic to the NumPy kernel — multiply/compare only);
     - cap tiles: chord^2 test (multiply/add, same operation order as
       the kernel);
-    - polygon tiles: winding parity (reference Loop.ts:372-380) as an
-      ``aggregate`` over the tile's edge array (broadcast column),
-      with the triage determinant sign band of predicates.ts:186-191.
+    - polygon tiles: winding parity (reference Loop.ts:372-380) as one
+      ``aggregate`` over the tile's edge array, with the triage
+      determinant sign band of predicates.ts:186-191. The edges are
+      data in the broadcast geometry frame, never plan literals, so
+      the plan has the same size for 3 edges or 10^4.
       Lanes where any determinant falls inside the certified error
       band (|det| <= 1.8274*eps, i.e. the point within ~2.5 nm of an
       edge plane) are counted into the accumulator's high digits and
@@ -64,31 +66,50 @@ from .tiles import (
 
 _D = math.pi / 180.0
 _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
+_CACHE_MAX = 32
 _COV_FRAME_CACHE: dict = {}
 _PAIRS_CACHE: dict = {}
-_PAIRS_CACHE_MAX = 32
 
 
-def _prune_pairs_cache() -> None:
+def _prune(cache: dict) -> None:
     """Evict entries whose tileset/session weakrefs died, then bound
     the memo (FIFO over dict insertion order): a long-lived
     interactive driver must not accumulate one analyzed plan per
-    distinct query shape forever."""
-    dead = [
-        k for k, v in _PAIRS_CACHE.items()
-        if v[0]() is None or v[1]() is None
-    ]
+    distinct tile set or query shape forever. Shared by both memos
+    (values are ``(ts weakref, session weakref, ...)``)."""
+    dead = [k for k, v in cache.items() if v[0]() is None or v[1]() is None]
     for k in dead:
-        del _PAIRS_CACHE[k]
-    while len(_PAIRS_CACHE) >= _PAIRS_CACHE_MAX:
-        del _PAIRS_CACHE[next(iter(_PAIRS_CACHE))]
+        del cache[k]
+    while len(cache) >= _CACHE_MAX:
+        del cache[next(iter(cache))]
 
 
+# edge start, edge end, edge normal, origin-side determinant
+_EDGE_FIELDS = ("cx", "cy", "cz", "dx", "dy", "dz", "nx", "ny", "nz", "dea")
 _EDGE_STRUCT = (
-    "array<struct<cx:double,cy:double,cz:double,"
-    "dx:double,dy:double,dz:double,"
-    "nx:double,ny:double,nz:double,dea:double>>"
+    "array<struct<" + ",".join(f"{f}:double" for f in _EDGE_FIELDS) + ">>"
 )
+_COV_COLS = (("cell", "BIGINT"), ("tile_i", "INT"), ("interior", "BOOLEAN"))
+_GEOM_COLS = (
+    ("tile_i", "INT"), ("kind", "INT"), ("origin_parity", "BOOLEAN"),
+    ("lat_lo", "DOUBLE"), ("lat_hi", "DOUBLE"), ("lng_lo", "DOUBLE"),
+    ("lng_hi", "DOUBLE"), ("ccx", "DOUBLE"), ("ccy", "DOUBLE"),
+    ("ccz", "DOUBLE"), ("cr2", "DOUBLE"), ("edges", _EDGE_STRUCT),
+)
+
+
+def _values_frame(
+    spark: SparkSession, rows: list[str], name: str, cols: tuple
+) -> DataFrame:
+    """Inline ``VALUES`` frame of ``(column, SQL type)`` ``cols``; a
+    typed empty frame when ``rows`` is empty (``VALUES`` with no rows
+    is not valid SQL)."""
+    if not rows:
+        return spark.createDataFrame([], ", ".join(f"{c} {t}" for c, t in cols))
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(rows)}"
+        f" AS {name}({', '.join(c for c, _ in cols)})"
+    )
 
 
 def covering_frames(
@@ -98,28 +119,25 @@ def covering_frames(
 
     Both frames are broadcast-sized: O(covering cells) and
     O(tiles + polygon edges), joined separately (cell lookup, then
-    per-tile geometry). Round 6 NOTE: a merged single-frame variant
-    (geometry denormalized onto every covering row, one join) was
-    built, measured and REVERTED — it measured no better than the
-    two-join shape once the _winding_inline_sql fallback regression
-    (see that function) was isolated, and the two-join shape keeps the
-    prior plan structure.
+    per-tile geometry). Every polygon tile ships its edges, with the
+    precomputed normals and origin determinants, as DATA in the
+    geometry frame's ``edges`` column, so no edge coordinate becomes a
+    plan expression: analysis, optimization and codegen cost does not
+    grow with the tile set's edge count. Tiles without edges (rects,
+    caps, empty/full loops) carry a typed empty array.
 
-    What round 6 keeps: both frames are inline ``VALUES`` SQL, which
-    the analyzer resolves to a LocalRelation — broadcasting a
-    LocalRelation is pure driver work, while the previous
-    ``createDataFrame`` frames were pickled-RDD-backed
-    (``Scan ExistingRDD``) and every broadcast materialization
-    launched a real job with Python-deserializing tasks (2 of
-    rect_tag's 5 jobs per run). Memoized per (tile set, session) as
-    before, with weakref identity guards.
+    Both frames are inline ``VALUES`` SQL, which the analyzer resolves
+    to a LocalRelation — broadcasting a LocalRelation is pure driver
+    work (a ``createDataFrame`` frame is pickled-RDD-backed and every
+    broadcast materialization launches a job). An empty tile set, or
+    one whose coverings are all empty, gets typed empty frames.
+    Memoized per (tile set, session) with weakref identity guards.
     """
     key = (id(ts), id(spark))
     hit = _COV_FRAME_CACHE.get(key)
     if hit is not None and hit[0]() is ts and hit[1]() is spark:
         return hit[2]
-    cells = ts.cov_cell
-    levels = sorted({int(cs.level(int(c))) for c in cells})
+    levels = sorted({int(cs.level(int(c))) for c in ts.cov_cell})
 
     def d(v: float) -> str:  # shortest round-trip double literal
         return f"CAST('{float(v)!r}' AS DOUBLE)"
@@ -129,181 +147,81 @@ def covering_frames(
         f" {'true' if i else 'false'})"
         for c, t, i in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior)
     ]
-    cov = spark.sql(
-        "SELECT * FROM VALUES " + ", ".join(cov_rows)
-        + " AS _cov(cell, tile_i, interior)"
-    )
+    cov = _values_frame(spark, cov_rows, "_cov", _COV_COLS)
 
+    # edge normals + origin-side determinant, same op order as
+    # tiles.polygon_contains_points (bitwise parity)
     ox, oy, oz = _origin_xyz()
+    nx = ts.cy * ts.dz - ts.cz * ts.dy
+    ny = ts.cz * ts.dx - ts.cx * ts.dz
+    nz = ts.cx * ts.dy - ts.cy * ts.dx
+    dea = nx * ox + ny * oy + nz * oz
+    cols = (ts.cx, ts.cy, ts.cz, ts.dx, ts.dy, ts.dz, nx, ny, nz, dea)
     geom_rows = []
     for t in range(len(ts.tile_ids)):
-        kind = int(ts.tile_kind[t])
         e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
-        # small polygons are fully inlined into the plan
-        # (_winding_inline_sql); only big ones need the array column
-        if kind == KIND_POLYGON and e1 - e0 > MAX_INLINE_EDGES:
-            cx = ts.cx[e0:e1]
-            cy = ts.cy[e0:e1]
-            cz = ts.cz[e0:e1]
-            dx = ts.dx[e0:e1]
-            dy = ts.dy[e0:e1]
-            dz = ts.dz[e0:e1]
-            # edge normals + origin-side determinant, same op order as
-            # tiles.polygon_contains_points (bitwise parity)
-            nx = cy * dz - cz * dy
-            ny = cz * dx - cx * dz
-            nz = cx * dy - cy * dx
-            dea = nx * ox + ny * oy + nz * oz
-            structs = ", ".join(
-                "named_struct("
-                f"'cx', {d(cx[k])}, 'cy', {d(cy[k])}, 'cz', {d(cz[k])},"
-                f" 'dx', {d(dx[k])}, 'dy', {d(dy[k])}, 'dz', {d(dz[k])},"
-                f" 'nx', {d(nx[k])}, 'ny', {d(ny[k])}, 'nz', {d(nz[k])},"
-                f" 'dea', {d(dea[k])})"
-                for k in range(e1 - e0)
-            )
-            edges_sql = f"array({structs})"
+        if e1 > e0:
+            edges_sql = "array({})".format(", ".join(
+                "named_struct({})".format(", ".join(
+                    f"'{n}', {d(c[k])}" for n, c in zip(_EDGE_FIELDS, cols)
+                ))
+                for k in range(e0, e1)
+            ))
         else:
             edges_sql = f"CAST(array() AS {_EDGE_STRUCT})"
         lat_lo, lat_hi, lng_lo, lng_hi = (float(v) for v in ts.rect_bounds[t])
         ccx, ccy, ccz = (float(v) for v in ts.cap_center[t])
         geom_rows.append(
-            f"({t}, {kind},"
+            f"({t}, {int(ts.tile_kind[t])},"
             f" {'true' if ts.origin_parity[t] else 'false'},"
             f" {d(lat_lo)}, {d(lat_hi)}, {d(lng_lo)}, {d(lng_hi)},"
             f" {d(ccx)}, {d(ccy)}, {d(ccz)}, {d(float(ts.cap_r2[t]))},"
             f" {edges_sql})"
         )
-    geom = spark.sql(
-        "SELECT * FROM VALUES " + ", ".join(geom_rows)
-        + " AS _geom(tile_i, kind, origin_parity,"
-        " lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2, edges)"
-    )
+    geom = _values_frame(spark, geom_rows, "_geom", _GEOM_COLS)
+    _prune(_COV_FRAME_CACHE)
     _COV_FRAME_CACHE[key] = (weakref.ref(ts), weakref.ref(spark), (cov, geom, levels))
     return cov, geom, levels
 
 
 _EPS = repr(MAX_DETERMINANT_ERROR)
-# Tiles up to this many edges get their winding test UNROLLED into the
-# plan with literal edge coordinates — whole-stage codegen, ~µs-free.
-# Bigger tiles (real admin boundaries) fall back to the array-column
-# aggregate, which is interpreted per element (~µs/edge/row).
-MAX_INLINE_EDGES = 96
-
-
-def _sgn(x: str) -> str:
-    return f"(CASE WHEN ({x}) > {_EPS} THEN 1 WHEN ({x}) < -{_EPS} THEN -1 ELSE 0 END)"
 
 
 def _indet(x: str) -> str:
     return f"(abs({x}) <= {_EPS})"
 
 
-def _crossing_terms(
-    det_ab_c: str, det_ab_d: str, det_e_b: str, det_e_a: str
-) -> tuple[str, str]:
-    """(crossing 0/1, indeterminate boolean) for one edge.
-
-    Orientation identities and sign band match
-    tiles.polygon_contains_points: acb=-s(ab.c), bda=s(ab.d),
-    cbd=-s(n.b), dac=s(n.a); proper crossing iff all equal and != 0.
-    """
-    acb = f"(-{_sgn(det_ab_c)})"
-    bda = _sgn(det_ab_d)
-    cbd = f"(-{_sgn(det_e_b)})"
-    dac = _sgn(det_e_a)
-    cross = (
-        f"(CASE WHEN {acb} != 0 AND {acb} = {bda} AND {acb} = {cbd}"
-        f" AND {acb} = {dac} THEN 1L ELSE 0L END)"
-    )
-    uncert = (
-        f"({_indet(det_ab_c)} OR {_indet(det_ab_d)}"
-        f" OR {_indet(det_e_b)} OR {_indet(det_e_a)})"
-    )
-    return cross, uncert
-
-
 def _winding_agg_sql() -> str:
-    """Array-aggregate winding over the ``edges`` column (fallback path
-    for tiles too big to inline).
+    """Winding accumulator: one ``aggregate`` over the tile's ``edges``
+    column (broadcast data, see covering_frames), the single form for
+    every polygon tile whatever its edge count. A zero-edge tile folds
+    to 0 and answers by its origin parity.
 
     acc % _UNCERT   = certified crossing count,
     acc / _UNCERT  >0 = some determinant fell in the triage band.
+
+    Per edge, with the four determinants d1 = ab.c, d2 = ab.d,
+    d3 = n.b, d4 = n.a (origin side, precomputed): a determinant
+    inside the +-eps band makes the edge uncertified (and its crossing
+    sign 0, so it never also counts as a crossing); otherwise the edge
+    crosses iff the orientations acb=-s(d1), bda=s(d2), cbd=-s(d3),
+    dac=s(d4) all agree — the sign band of
+    tiles.polygon_contains_points. The aggregate is interpreted per
+    element, so each determinant is written as few times as the
+    decision allows.
     """
-    cross, uncert = _crossing_terms(
-        "(_abx * e.cx + _aby * e.cy + _abz * e.cz)",
-        "(_abx * e.dx + _aby * e.dy + _abz * e.dz)",
-        "(e.nx * _px + e.ny * _py + e.nz * _pz)",
-        "e.dea",
+    d1 = "(_abx * e.cx + _aby * e.cy + _abz * e.cz)"
+    d2 = "(_abx * e.dx + _aby * e.dy + _abz * e.dz)"
+    d3 = "(e.nx * _px + e.ny * _py + e.nz * _pz)"
+    d4 = "e.dea"
+    step = (
+        f"CASE WHEN {_indet(d4)} OR {_indet(d1)} OR {_indet(d2)} OR {_indet(d3)}"
+        f" THEN {_UNCERT}L"
+        f" WHEN {d1} < 0.0D THEN"
+        f" CASE WHEN {d2} > 0.0D AND {d3} < 0.0D AND {d4} > 0.0D THEN 1L ELSE 0L END"
+        f" WHEN {d2} < 0.0D AND {d3} > 0.0D AND {d4} < 0.0D THEN 1L ELSE 0L END"
     )
-    return (
-        f"aggregate(edges, 0L, (acc, e) -> acc + {cross}"
-        f" + (CASE WHEN {uncert} THEN {_UNCERT}L ELSE 0L END))"
-    )
-
-
-def _winding_inline_sql(ts: TileSetStruct) -> str:
-    """Winding accumulator with the tile set inlined as literals.
-
-    The tile set is a plan-time constant, so each (small) polygon's
-    edge loop unrolls into whole-stage codegen — one branch of an
-    if-chain per tile, only the matching branch evaluated per row.
-    This is 10-30x faster than the interpreted higher-order-function
-    aggregate and is the difference between the winding refinement
-    dominating the flagship and it being noise. Edge normals and
-    origin determinants are precomputed driver-side in NumPy with the
-    exact kernel op order (bitwise parity preserved).
-    """
-    ox, oy, oz = _origin_xyz()
-    branches = []
-    for t in range(len(ts.tile_ids)):
-        if int(ts.tile_kind[t]) != KIND_POLYGON:
-            continue
-        e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
-        if e1 - e0 > MAX_INLINE_EDGES or e1 == e0:
-            continue
-        cx = ts.cx[e0:e1]
-        cy = ts.cy[e0:e1]
-        cz = ts.cz[e0:e1]
-        dx = ts.dx[e0:e1]
-        dy = ts.dy[e0:e1]
-        dz = ts.dz[e0:e1]
-        nx = cy * dz - cz * dy
-        ny = cz * dx - cx * dz
-        nz = cx * dy - cy * dx
-        dea = nx * ox + ny * oy + nz * oz
-        crosses, uncerts = [], []
-        for k in range(e1 - e0):
-            cross, uncert = _crossing_terms(
-                f"(_abx * {float(cx[k])!r}D + _aby * {float(cy[k])!r}D"
-                f" + _abz * {float(cz[k])!r}D)",
-                f"(_abx * {float(dx[k])!r}D + _aby * {float(dy[k])!r}D"
-                f" + _abz * {float(dz[k])!r}D)",
-                f"({float(nx[k])!r}D * _px + {float(ny[k])!r}D * _py"
-                f" + {float(nz[k])!r}D * _pz)",
-                f"{float(dea[k])!r}D",
-            )
-            crosses.append(cross)
-            uncerts.append(uncert)
-        body = (
-            f"(({' + '.join(crosses)})"
-            f" + (CASE WHEN {' OR '.join(uncerts)} THEN {_UNCERT}L ELSE 0L END))"
-        )
-        branches.append(f"WHEN tile_i = {t} THEN {body}")
-    # The ELSE arm must STAY the aggregate form even when every
-    # polygon tile is inlined (making it unreachable): a round-6
-    # experiment replaced it with a plain `0L` for inline-only tile
-    # sets and the flagship ran 3.5x SLOWER (interleaved A/B, 13.6s vs
-    # 3.9s at x1600) — without the higher-order aggregate() the _wind
-    # CASE counts as collapsible, CollapseProject inlines it into its
-    # multiple consumers (_uncert, _poly_parity -> _keep_sql), and the
-    # whole winding unroll is re-evaluated per consumer per row. The
-    # `edges` column the fallback references is always present
-    # (covering_frames ships typed empty arrays for inline tiles).
-    fallback = _winding_agg_sql()
-    if not branches:
-        return fallback
-    return "CASE " + " ".join(branches) + f" ELSE {fallback} END"
+    return f"aggregate(edges, 0L, (acc, e) -> acc + {step})"
 
 
 def tag_candidates(
@@ -374,10 +292,10 @@ def tag_candidates(
         "least(4.0D, (_px - ccx) * (_px - ccx) + (_py - ccy) * (_py - ccy)"
         " + (_pz - ccz) * (_pz - ccz)) AS _chord2",
         "(_chord2 <= cr2) AS _cap_ok",
-        # polygon: winding, inlined per tile (lazy CASE skips off-poly
-        # lanes; only the matching tile's unrolled branch evaluates)
+        # polygon: winding over the tile's edge array (lazy CASE skips
+        # interior and non-polygon lanes)
         f"(CASE WHEN kind = {KIND_POLYGON} AND NOT interior"
-        f" THEN ({_winding_inline_sql(ts)}) ELSE 0L END) AS _wind",
+        f" THEN ({_winding_agg_sql()}) ELSE 0L END) AS _wind",
         f"(_wind >= {_UNCERT}L) AS _uncert",
         f"(((_wind % {_UNCERT}L) % 2 = 1) != origin_parity) AS _poly_parity",
         f"(interior OR CASE WHEN kind = {KIND_RECT} THEN _rect_ok"
@@ -416,11 +334,11 @@ def tag_tiles_pairs(
 
     The fully-analyzed result DataFrame is memoized per
     (tile set, session, input-plan semantics, arguments): Catalyst
-    analysis of the inlined encode chain + winding CASE is seconds of
-    fixed driver cost, and interactive workloads re-issue the same
-    query shape — a prepared-statement cache, exactly like
-    covering_frames' own memo. DataFrames are immutable/lazy, so
-    handing the same object back is safe; each action re-executes.
+    analysis of the encode chain and the refinement stack is fixed
+    driver cost, and interactive workloads re-issue the same query
+    shape — a prepared-statement cache, exactly like covering_frames'
+    own memo. DataFrames are immutable/lazy, so handing the same
+    object back is safe; each action re-executes.
     """
     try:
         sem = df.semanticHash()
@@ -446,7 +364,7 @@ def tag_tiles_pairs(
         spark, df, ts, lat_col, lng_col, exact_residuals, cellid_col
     )
     if sem is not None:
-        _prune_pairs_cache()
+        _prune(_PAIRS_CACHE)
         _PAIRS_CACHE[key] = (weakref.ref(ts), weakref.ref(spark), df, out)
     return out
 
